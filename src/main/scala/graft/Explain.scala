@@ -1,24 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of the named
   * queries (or all) — used to keep parquet pushdown, broadcast choices
   * and shuffle counts honest while iterating.
   *
   *   sbt "runMain graft.Explain q1_agg q3_join"
+  *
+  * Defaults to the sf0.001 tables on the graft session, which is what
+  * PlanBudgetSpec plans against, so `-c` prints the counts it checks.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val spark = GraftSession.fromEnv()
     spark.sparkContext.setLogLevel("ERROR")
     // -c: counts-only table (one `name N` line per query) — the mode
     // that seeds PlanBudgetSpec budget entries

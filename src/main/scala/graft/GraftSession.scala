@@ -30,4 +30,17 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       // events-style nanosecond parquet reads as epoch-ns longs
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** The session every graft main runs on: `local[c]` with `c` shuffle
+    * partitions, where `c` is `SPARK_GRAFT_CPUS` or, when unset, the
+    * machine's core count.
+    */
+  def fromEnv(): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val s = configure(SparkSession.builder().master(s"local[$cores]"), cores)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

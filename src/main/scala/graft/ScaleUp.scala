@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-curve data builder: replicates the sf0.1 fact tables
@@ -31,15 +31,7 @@ object ScaleUp {
     val tables: Option[Set[String]] =
       args.lift(3).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(t: String) = tables.forall(_.contains(t))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
 
     val KeyOff = 100000000L // beyond every sf0.1 key range
     val UserOff = 10000000L

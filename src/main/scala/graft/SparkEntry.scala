@@ -43,13 +43,7 @@ object SparkEntry {
     * part of the measured artifact).
     */
   private def ftbl(s: SparkSession, dir: String, name: String): DataFrame =
-    if (fanoutEnabled) Par.fanout(tbl(s, dir, name)) else tbl(s, dir, name)
-
-  /** A/B hook for [[ProfAB]]/ProfQ only — production default is ON
-    * (SPARK_GRAFT_FANOUT=0 disables, for fresh-JVM A/B measurement).
-    */
-  @volatile private[graft] var fanoutEnabled =
-    sys.env.get("SPARK_GRAFT_FANOUT").forall(_ != "0")
+    Par.fanout(tbl(s, dir, name))
 
   /** events with ts normalized to the canonical epoch-µs long regardless
     * of the parquet physical type (TIMESTAMP(NANOS) long, TIMESTAMP, or
@@ -3986,8 +3980,8 @@ object SparkEntry {
     // all-drop). Learning on separable data is pinned by
     // OperatorSpec's "train learns the language labels" descent test
     "doc_classify_train_eval" -> { (s, dir) =>
-      // r16: DROPPED from the fanout whitelist — paired same-JVM A/B
-      // (ProfAB, two JVMs) measures the raw single-task scan 0.24–0.66 s
+      // r16: DROPPED from the fanout whitelist — paired A/B runs
+      // measured the raw single-task scan 0.24–0.66 s
       // FASTER here: the 3-epoch loop re-reads the fanned checkpoint ~8
       // times and the 32-way stages' per-task overhead outweighs the
       // tiny per-partition compute (2.5k train docs). The r15 whitelist

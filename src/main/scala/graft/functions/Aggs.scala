@@ -31,7 +31,7 @@ object Aggs {
     * through the full decimal cast for outliers — and the micro-units
     * accumulate as DECIMAL(38,0). Same exactness and order-
     * independence as summing DECIMAL(38,6) directly, but the per-row
-    * BigDecimal construction (the hot-path cost: Prof shows q1 at
+    * BigDecimal construction (the hot-path cost: profiled q1 ran
     * 1.13s decimal vs 0.83s micros at sf0.1) is replaced by codegen'd
     * double arithmetic on the fast path.
     */

@@ -342,40 +342,72 @@ object HashImpl {
   /** Float array widened to double — bit-identical to the interpreted
     * `transform(v, x => x.cast("double"))` (float→double is exact),
     * one tight loop per ROW instead of a lambda dispatch per element.
+    * A null element stays null, as it does under `transform`.
     */
   def vecCastD(a: ArrayData): ArrayData = {
     val n = a.numElements()
     val out = new Array[Double](n)
+    var nulls: Array[Boolean] = null
     var i = 0
-    while (i < n) { out(i) = a.getFloat(i).toDouble; i += 1 }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
+    while (i < n) {
+      if (a.isNullAt(i)) nulls = markNull(nulls, n, i)
+      else out(i) = a.getFloat(i).toDouble
+      i += 1
+    }
+    doubleArray(out, nulls)
   }
 
   /** Elementwise a(i) − b(i) over two double arrays — bit-identical to
-    * `zip_with(a, b, (x, y) => x - y)` (same IEEE op, index order).
+    * `zip_with(a, b, (x, y) => x - y)` (same IEEE op, index order; a
+    * null on either side gives a null element).
     * Caller guarantees equal lengths (vector/centroid pairs).
     */
   def vecSubDD(a: ArrayData, b: ArrayData): ArrayData = {
     val n = a.numElements()
     val out = new Array[Double](n)
+    var nulls: Array[Boolean] = null
     var i = 0
-    while (i < n) { out(i) = a.getDouble(i) - b.getDouble(i); i += 1 }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) nulls = markNull(nulls, n, i)
+      else out(i) = a.getDouble(i) - b.getDouble(i)
+      i += 1
+    }
+    doubleArray(out, nulls)
   }
 
   /** Elementwise a(i) + b(i), float + double (a widened first) — the
     * RQ reconstruction c1 + c2; bit-identical to
-    * `zip_with(a, b, (x, y) => x.cast("double") + y)`.
+    * `zip_with(a, b, (x, y) => x.cast("double") + y)`, nulls included.
     */
   def vecAddFD(a: ArrayData, b: ArrayData): ArrayData = {
     val n = a.numElements()
     val out = new Array[Double](n)
+    var nulls: Array[Boolean] = null
     var i = 0
-    while (i < n) { out(i) = a.getFloat(i).toDouble + b.getDouble(i); i += 1 }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) nulls = markNull(nulls, n, i)
+      else out(i) = a.getFloat(i).toDouble + b.getDouble(i)
+      i += 1
+    }
+    doubleArray(out, nulls)
+  }
+
+  // null positions are tracked lazily: vectors almost never hold one,
+  // so the common row allocates nothing beyond its output
+  private def markNull(nulls: Array[Boolean], n: Int, i: Int): Array[Boolean] = {
+    val m = if (nulls == null) new Array[Boolean](n) else nulls
+    m(i) = true
+    m
+  }
+
+  private def doubleArray(out: Array[Double], nulls: Array[Boolean]): ArrayData = {
+    val r = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(out)
+    if (nulls != null) {
+      var i = 0
+      while (i < nulls.length) { if (nulls(i)) r.setNullAt(i); i += 1 }
+    }
+    r
   }
 
   /** Hashed token-count vector: out(j) = |{t : polyHash(t) mod dim = j}|

@@ -1038,6 +1038,11 @@ object Dedup {
     // — is the query's dominant compute, and AQE byte-coalescing parks
     // it on a few partitions. Pin the exchange's width; both join sides
     // read the SAME spread frame, so ReuseExchange still dedups it.
+    // Trade-off: the explicit repartition(p, sid) marks the exchange as
+    // user-specified, so AQE's skew-join split no longer applies to this
+    // shuffle_hash self-join — a hot sid lands whole on one task. The
+    // only bound on that key is `maxDocFreq`; the exact default (None)
+    // leaves it unbounded.
     val invW = Par.spread(inv, col("sid"))
     val a = invW.select(col(idCol).as("id_a"), col("n_sh").as("n_a"),
       col("sid"))

@@ -152,13 +152,23 @@ case class IndexSumLong(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+private object VecExprs {
+  /** Whether an array-typed input may hold null elements: the
+    * elementwise vector expressions pass such a null through. */
+  def elementsNullable(e: Expression): Boolean = e.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  }
+}
+
 /** Float array widened to double (exact), one tight loop per row —
   * replaces the interpreted `transform(v, _.cast("double"))` lambda
   * the kmeans/RQ/PQ chains ran per corpus element.
   */
 case class VecCastD(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType =
+    ArrayType(DoubleType, VecExprs.elementsNullable(child))
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def nullSafeEval(v: Any): Any =
     graft.functions.HashImpl.vecCastD(v.asInstanceOf[ArrayData])
@@ -172,7 +182,8 @@ case class VecCastD(child: Expression)
   */
 case class VecSubDD(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType = ArrayType(DoubleType,
+    VecExprs.elementsNullable(left) || VecExprs.elementsNullable(right))
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -189,7 +200,8 @@ case class VecSubDD(left: Expression, right: Expression)
   */
 case class VecAddFD(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType = ArrayType(DoubleType,
+    VecExprs.elementsNullable(left) || VecExprs.elementsNullable(right))
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(DoubleType))
   override def nullSafeEval(a: Any, b: Any): Any =

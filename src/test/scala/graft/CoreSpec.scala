@@ -7,14 +7,8 @@ import graft.ts.TimeRange
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the full extension surface (native SQL functions + the banded
-      // range-join rule, inert until its bucket conf is set)
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
+    // 4 shuffle partitions: the Lake/streaming specs pin file counts
+    val s = GraftSession.configure(SparkSession.builder().master("local[4]"), 4)
       // bucketed-table tests register catalog tables; keep their files
       // out of the repo working tree
       .config("spark.sql.warehouse.dir",
@@ -79,7 +73,6 @@ class TimeRangeSpec extends AnyFunSuite {
 class ApproxAggSpec extends AnyFunSuite {
   test("sketch aggregates land within their error bounds of exact") {
     val spark = SparkTestSession.spark
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.functions._
     val ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
     val r = ev.agg(

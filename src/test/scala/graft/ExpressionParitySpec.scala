@@ -22,7 +22,6 @@ class ExpressionParitySpec extends AnyFunSuite {
   }
 
   test("ShingleHashes == HOF shingle ids on real documents") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val bad = docs.select(
       TextOps.shingleIds($"text", 3).as("n"),
@@ -35,7 +34,6 @@ class ExpressionParitySpec extends AnyFunSuite {
   }
 
   test("CharGramHashes rolling == direct per-substring PolyHash") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"text")
       .union(Seq("short", "Ünïcodé ﬆring 汉字汉字汉字汉字汉字汉字汉字",
@@ -132,9 +130,30 @@ class ExpressionParitySpec extends AnyFunSuite {
     assert(bad.isEmpty)
   }
 
+  test("VecCastD / VecSubDD / VecAddFD pass a null element through like their HOF twins") {
+    val G = org.apache.spark.sql.graft.GraftExpressions
+    val df = Seq((Seq[java.lang.Float](1.5f, null, -2f),
+      Seq[java.lang.Double](0.25, 4.0, null))).toDF("a", "bd")
+    // as a local relation the projection is evaluated interpreted; over
+    // a shuffle it runs through codegen
+    for (in <- Seq(df, df.repartition(1))) {
+      val out = in.select(
+        G.vec_cast_d($"a"), transform($"a", x => x.cast("double")),
+        G.vec_sub_dd(G.vec_cast_d($"a"), $"bd"),
+        zip_with($"a", $"bd", (x, y) => x.cast("double") - y),
+        G.vec_add_fd($"a", $"bd"),
+        zip_with($"a", $"bd", (x, y) => x.cast("double") + y))
+      val r = out.head()
+      assert(r.getSeq[Any](0) == Seq(1.5, null, -2.0))
+      for (i <- 0 until 6 by 2) assert(r.getSeq[Any](i) == r.getSeq[Any](i + 1))
+      out.schema.fields.foreach(f =>
+        assert(f.dataType == org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.DoubleType, containsNull = true), f.name))
+    }
+  }
+
   test("TokenCountVec == the per-bucket filter-fold on real documents") {
     val G = org.apache.spark.sql.graft.GraftExpressions
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dim = 16
     val toks = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(TextOps.tokens($"text").as("tk"))
@@ -171,7 +190,6 @@ class ExpressionParitySpec extends AnyFunSuite {
   }
 
   test("EwmaAgg window fold == collect_list HOF fold on real events") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select("user_id", "ts", "value")

@@ -214,7 +214,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("Dedup.contaminationBloom contains the exact result (no false negatives)") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pred = col("doc_id") % 97 === 0
     val exact = Dedup.contamination(docs, pred)
@@ -471,7 +470,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("cmsHeavyHitters: both sketch contracts hold; ranks are 1..k") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val hh = Freq.cmsHeavyHitters(docs).collect()
     assert(hh.length == 20)
@@ -486,7 +484,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("contaminationAudit: exact columns match the exact operator; verdicts hold") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val pred = col("doc_id") % 97 === 0
     val audit = Dedup.contaminationAudit(docs, pred)
@@ -1087,7 +1084,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("Knn.lshRangeSearch is a subset of the exact radius, same cosines") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val q = emb.where($"vec_id" % 100 === 0)
     val exact = Knn.rangeSearch(emb, q, 64, 0.2).collect()
@@ -1181,7 +1177,6 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("Salted rollup equals plain rollup for decomposable aggs") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
     val plain = Rollup.fixedWindow(ev, "ts", Seq("user_id"), "1h",

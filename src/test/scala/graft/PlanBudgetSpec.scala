@@ -540,7 +540,6 @@ class PlanBudgetSpec extends AnyFunSuite {
     "emb_ann_recall" -> 132)
 
   test("no query exceeds its exchange budget") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val over = budgets.toSeq.sortBy(_._1).flatMap { case (name, budget) =>
       val got = exchanges(name)
       if (got > budget) Some(s"$name: $got > budget $budget") else None

@@ -122,7 +122,6 @@ class LakeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("daily-partitioned layout prunes partitions for time crops") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
     val dir = java.nio.file.Files.createTempDirectory("graft_lake").toString
@@ -549,7 +548,6 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("streamAppendDaily lands a stream in the partitioned layout") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select("user_id", "ts", "value")
@@ -668,7 +666,6 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join and aggregate with zero runtime exchange") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select("user_id", "ts", "value")
@@ -825,7 +822,6 @@ class StreamRollupSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("streaming fixed-window rollup matches batch rollup") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select("user_id", "ts", "value")
@@ -852,7 +848,6 @@ class StreamRollupSpec extends AnyFunSuite {
   }
 
   test("streaming sliding-window rollup matches batch slidingWindow") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select("user_id", "ts", "value")
@@ -877,7 +872,6 @@ class StreamRollupSpec extends AnyFunSuite {
   }
 
   test("streaming M4 downsample matches batch Trend.m4 exactly") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select("user_id", "ts", "value")
@@ -1345,7 +1339,6 @@ class StreamRollupSpec extends AnyFunSuite {
   }
 
   test("stream-stream interval join matches the batch RangeJoin") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select("event_id", "user_id", "ts", "event_type")

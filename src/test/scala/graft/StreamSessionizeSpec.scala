@@ -11,7 +11,6 @@ class StreamRateSpec extends AnyFunSuite {
 
   test("streaming rate equals batch Rate exactly (state spans batches)") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .where($"event_type" === "purchase")
@@ -43,7 +42,6 @@ class StreamAlignSpec extends AnyFunSuite {
 
   test("streaming align equals batch Align bit-for-bit") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .where($"event_type" === "click")
@@ -72,7 +70,6 @@ class StreamAsOfSpec extends AnyFunSuite {
 
   test("streaming as-of lookup equals batch Combine.asof exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
     val lookups = ev.where($"event_type" === "purchase")
@@ -105,7 +102,6 @@ class StreamAsOfSpec extends AnyFunSuite {
 
   test("streaming as-of with tolerance equals batch asofTolerance") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
     val lookups = ev.where($"event_type" === "purchase")
@@ -147,7 +143,6 @@ class StreamDedupSpec extends AnyFunSuite {
 
   test("streaming dedup keeps exactly the batch-distinct key set") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"event_type", $"ts", $"value")
@@ -175,7 +170,6 @@ class StreamSessionizeSpec extends AnyFunSuite {
 
   test("streaming sessionize emits every CLOSED session = batch minus open") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val gapUs = 30L * 60L * 1000000L
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))

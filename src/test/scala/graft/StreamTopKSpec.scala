@@ -11,7 +11,6 @@ class StreamTopKSpec extends AnyFunSuite {
 
   test("streaming per-window top-k equals the batch ranking exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts", $"value")

@@ -384,7 +384,6 @@ class TrendSpec extends AnyFunSuite {
 
   test("stl identity: value = trend + seasonal + resid wherever defined") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
     val dec = Trend.stlDecompose(ev, "ts", "value", Seq("user_id"),
@@ -634,7 +633,6 @@ class StreamFillSpec extends AnyFunSuite {
 
   test("streaming pad fill equals batch Fill.pad exactly (fillLimit honored)") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // dedup equal (user, ts) rows first: pad's output on a tie depends
     // on which duplicate the window scan sees last, which is exactly
     // the nondeterminism ts_dedup exists to remove
@@ -671,7 +669,6 @@ class StreamEwmaSpec extends AnyFunSuite {
 
   test("streaming ewma equals batch Trend.ewma exactly (bounded-span contract)") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts", $"value")
@@ -700,7 +697,6 @@ class StreamCrossingsSpec extends AnyFunSuite {
 
   test("streaming crossings equal the batch lag formulation exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts", $"value")
@@ -738,7 +734,6 @@ class StreamCusumSpec extends AnyFunSuite {
 
   test("streaming cusum equals the batch window-algebra rewrite exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts", $"value")
@@ -771,7 +766,6 @@ class StreamHoltSpec extends AnyFunSuite {
 
   test("streaming burst alarms equal the batch viterbi fold exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts")
@@ -798,7 +792,6 @@ class StreamHoltSpec extends AnyFunSuite {
 
   test("streaming holt equals the batch window aggregate exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts", $"value")
@@ -831,7 +824,6 @@ class StreamBandsSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts", $"value")
@@ -867,7 +859,6 @@ class StreamHoltWintersSpec extends AnyFunSuite {
 
   test("streaming holt-winters equals the batch window aggregate exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts", $"value")
@@ -902,7 +893,6 @@ class StreamHampelSpec extends AnyFunSuite {
 
   test("streaming hampel equals batch trailing Trend.hampel exactly") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .transform(graft.functions.TimeIndex.normalizeUs(_, "ts"))
       .select($"user_id", $"ts", $"value")
